@@ -58,23 +58,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[Expression]) => { arity("jaccard_sim", args, 2)
         JaccardSim(args(0), args(1)) }))
     ext.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(tokens) - 64-bit simhash of a token array"),
+      info("simhash64",
+        "simhash64(tokens) - SQL-reproducible 62-bit arithmetic simhash of a token array"),
       (args: Seq[Expression]) => { arity("simhash64", args, 1)
         SimHash64(args(0)) }))
     ext.injectFunction((FunctionIdentifier("minhash_sig"),
-      info("minhash_sig", "minhash_sig(shingles, k) - k-entry minhash signature"),
+      info("minhash_sig",
+        "minhash_sig(shingles, k) - SQL-reproducible k-entry arithmetic-hash minhash signature"),
       (args: Seq[Expression]) => { arity("minhash_sig", args, 2)
         MinHashSig(args(0), intLit("minhash_sig", args(1), "k")) }))
-    ext.injectFunction((FunctionIdentifier("simhash64_arith"),
-      info("simhash64_arith",
-        "simhash64_arith(tokens) - SQL-reproducible 62-bit arithmetic simhash"),
-      (args: Seq[Expression]) => { arity("simhash64_arith", args, 1)
-        SimHash64Arith(args(0)) }))
-    ext.injectFunction((FunctionIdentifier("minhash_sig_arith"),
-      info("minhash_sig_arith",
-        "minhash_sig_arith(shingles, k) - SQL-reproducible arithmetic-hash minhash signature"),
-      (args: Seq[Expression]) => { arity("minhash_sig_arith", args, 2)
-        MinHashSigArith(args(0), intLit("minhash_sig_arith", args(1), "k")) }))
     // ranking args arrive as whatever integral type the user typed; the
     // aggregates' buffers store exact (Long/Int) — cast here (SimplifyCasts
     // erases the no-op ones after resolution, so resolved-LONG inputs keep

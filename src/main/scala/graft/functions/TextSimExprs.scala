@@ -14,13 +14,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * arrays per evaluation and dominate the benchmark. Each expression here
   * is a single pass calling a static helper, and `defineCodeGen` emits a
   * plain static call so whole-stage codegen keeps the surrounding pipeline
-  * fused. Hash function = XXH64 seed 42, identical to Spark's `xxhash64`.
+  * fused. Every hash is the engine-neutral modular arithmetic described
+  * below, so each kernel has a bit-identical DuckDB SQL form.
   */
 object TextSimHelpers {
-  private def xxhStr(s: UTF8String, seed: Long): Long =
-    org.apache.spark.sql.catalyst.expressions.XXH64
-      .hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, seed)
-
   /** Jaccard over two string arrays that are already sets (distinct):
     * |A∩B| / (|A| + |B| - |A∩B|). One set build + one probe pass.
     * J(∅,∅) = 0.0: two blank documents share no evidence of similarity,
@@ -40,73 +37,12 @@ object TextSimHelpers {
     inter.toDouble / (na + nb - inter).toDouble
   }
 
-  /** 64-bit SimHash over the distinct tokens of the array: per-bit majority
-    * vote of the tokens' xxhash64 values. Null elements are skipped (a
-    * tokenizer emitting nulls must not crash the task). */
-  def simhash64(tokens: ArrayData): Long = {
-    val n = tokens.numElements()
-    val seen = new java.util.HashSet[Long](n * 2)
-    val counts = new Array[Int](64)
-    var total = 0
-    var i = 0
-    while (i < n) {
-      val s = tokens.getUTF8String(i)
-      if (s != null) {
-        val h = xxhStr(s, 42L)
-        if (seen.add(h)) {
-          total += 1
-          var bit = 0
-          while (bit < 64) {
-            if ((h & (1L << bit)) != 0L) counts(bit) += 1
-            bit += 1
-          }
-        }
-      }
-      i += 1
-    }
-    var out = 0L
-    var bit = 0
-    while (bit < 64) {
-      if (counts(bit) * 2 > total) out |= (1L << bit)
-      bit += 1
-    }
-    out
-  }
-
-  /** MinHash signature: k independent streams in one pass over the shingle
-    * set. Stream j's hash of shingle s = xxh64(j as int, seed = xxh64(s,
-    * seed 42)) — the same chaining Spark's multi-arg xxhash64(s, j) uses. */
-  def minhash(shingles: ArrayData, k: Int): ArrayData = {
-    val mins = Array.fill(k)(Long.MaxValue)
-    val n = shingles.numElements()
-    var i = 0
-    while (i < n) {
-      val s = shingles.getUTF8String(i) // null elements skipped, like simhash
-      if (s != null) {
-        val base = xxhStr(s, 42L)
-        var j = 0
-        while (j < k) {
-          val hj = org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(j, base)
-          if (hj < mins(j)) mins(j) = hj
-          j += 1
-        }
-      }
-      i += 1
-    }
-    // NOTE: an empty (or all-null) input yields the degenerate all-MaxValue
-    // signature, which collides in every LSH band. The engine's shingle
-    // producer never emits an empty array (a short doc gets one whole-doc
-    // shingle); a caller feeding raw arrays must pre-filter empties.
-    new GenericArrayData(mins)
-  }
-
-  // ---- engine-neutral arithmetic-hash MinHash (the oracle mode) ----------
+  // ---- the engine-neutral hash family -----------------------------------
   //
-  // The xxhash64 MinHash above is the throughput default, but its hash is
-  // not expressible in ANSI SQL, so q27/q40 carried no DuckDB oracle. This
-  // mode replaces the hash with plain modular arithmetic both engines
-  // compute bit-identically (the same trick as q44/q60/q65's arithmetic
-  // sampling hash and q29's generated classifier SQL):
+  // xxhash64 is not expressible in ANSI SQL, so every hash here is plain
+  // modular arithmetic both engines compute bit-identically (the same
+  // trick as q44/q60/q65's arithmetic sampling hash and q29's generated
+  // classifier SQL):
   //
   //   H(s)      = fold over codepoints, acc0 = 7, acc = (acc*31 + cp) mod P
   //   h_j(s)    = (a_j * H(s) + b_j) mod P          (k fixed affine streams)
@@ -118,8 +54,7 @@ object TextSimHelpers {
   // `list_reduce(list_prepend(7, codepoints), (a,c) -> (a*31+c) % P)` —
   // see DedupOps.minhashLshOracleSql, which generates that SQL with the
   // same a_j/b_j constants inlined. Affine streams over a common base hash
-  // are the standard universal-hash MinHash construction, so the LSH
-  // s-curve is the same as the xxhash mode's.
+  // are the standard universal-hash MinHash construction.
 
   val ArithP = 2147483647L // 2^31 - 1
   def arithA(j: Int): Long = 1L + (j.toLong * 1103515245L + 12345L) % (ArithP - 1L)
@@ -130,7 +65,7 @@ object TextSimHelpers {
   def arithHash(s: UTF8String): Long = {
     // Decode code points straight off the UTF-8 bytes (r6): the previous
     // `s.toString` allocated + copied every token/shingle before hashing —
-    // one garbage String per hashed string in every arith-mode kernel
+    // one garbage String per hashed string in every hash kernel
     // (q27/q28/q40/q79). For VALID UTF-8 the byte decode yields exactly
     // the code points `toString.codePointAt` walks (a 4-byte sequence
     // becomes one supplementary code point either way); ANY malformed
@@ -194,10 +129,14 @@ object TextSimHelpers {
     arithCoefCache.computeIfAbsent(k,
       kk => (Array.tabulate(kk)(arithA), Array.tabulate(kk)(arithB)))
 
-  /** Arithmetic-mode MinHash signature: one pass over the shingle set, the
-    * same stream layout as [[minhash]] but with the affine streams above.
-    * Same empty-input caveat as the xxhash mode. */
-  def minhashArith(shingles: ArrayData, k: Int): ArrayData = {
+  /** MinHash signature: k affine streams in one pass over the shingle set.
+    * Null elements are skipped (a tokenizer emitting nulls must not crash
+    * the task). An empty (or all-null) input yields the degenerate
+    * all-MaxValue signature, which collides in every LSH band; the
+    * engine's shingle producer never emits an empty array (a short doc
+    * gets one whole-doc shingle), so a caller feeding raw arrays must
+    * pre-filter empties. */
+  def minhash(shingles: ArrayData, k: Int): ArrayData = {
     val (as, bs) = arithCoefs(k)
     val mins = Array.fill(k)(Long.MaxValue)
     val n = shingles.numElements()
@@ -218,17 +157,16 @@ object TextSimHelpers {
     new GenericArrayData(mins)
   }
 
-  /** Arithmetic-mode 62-bit SimHash: per-bit majority vote over the
-    * DISTINCT tokens, where token t's vote on bit b is the parity of the
-    * b-th affine stream (a_b·H(t)+c_b mod P) over the engine-neutral base
+  /** 62-bit SimHash: per-bit majority vote over the DISTINCT tokens, where
+    * token t's vote on bit b is the parity of the b-th affine stream (a_b·H(t)+c_b mod P) over the engine-neutral base
     * hash H — every piece plain modular arithmetic, so a DuckDB oracle
     * reproduces the fingerprint bit-identically (62 bits, not 64: bit 63
     * would need 1<<63, which overflows SQL BIGINT range checks, and 62
     * uniform bits lose nothing — the chunk-key pigeonhole and hamming
     * bound are unchanged with the two top bits constant 0). Distinctness
-    * is by token STRING (the SQL `list_distinct`), unlike the xxhash
-    * mode's by-hash dedup. */
-  def simhash64Arith(tokens: ArrayData): Long = {
+    * is by token STRING (the SQL `list_distinct`); null elements are
+    * skipped. */
+  def simhash64(tokens: ArrayData): Long = {
     val n = tokens.numElements()
     val seen = new java.util.HashSet[UTF8String](n * 2)
     val counts = new Array[Int](62)
@@ -257,37 +195,18 @@ object TextSimHelpers {
     out
   }
 
-  /** Arithmetic-mode band keys: the exact positional encoding
-    * `sig[i·r]·P + sig[i·r+1]` — collision-free over signature values in
-    * [0, P) and reproducible as plain SQL arithmetic. Restricted to r = 2:
+  /** LSH band keys: the exact positional encoding `sig[2i]·P + sig[2i+1]`
+    * — collision-free over signature values in [0, P) and reproducible as
+    * plain SQL arithmetic. Rows per band are fixed at r = 2:
     * P^3 would overflow 64-bit (r=2 is the engine's standard setting; wider
     * rows would need a modular fold, trading SQL-exactness away). */
-  def bandKeysArith(sig: ArrayData, b: Int): ArrayData = {
-    require(sig.numElements() >= b * 2, s"lsh_band_keys_arith: signature has " +
+  def bandKeys(sig: ArrayData, b: Int): ArrayData = {
+    require(sig.numElements() >= b * 2, s"lsh_band_keys: signature has " +
       s"${sig.numElements()} entries, bands x 2 rows needs ${b * 2}")
     val out = new Array[Long](b)
     var band = 0
     while (band < b) {
       out(band) = sig.getLong(band * 2) * ArithP + sig.getLong(band * 2 + 1)
-      band += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** LSH band keys: hash r consecutive signature entries per band. */
-  def bandKeys(sig: ArrayData, b: Int, r: Int): ArrayData = {
-    require(sig.numElements() >= b * r, s"lsh_band_keys: signature has " +
-      s"${sig.numElements()} entries, bands x rows needs ${b * r}")
-    val out = new Array[Long](b)
-    var band = 0
-    while (band < b) {
-      var h = 42L + band
-      var j = 0
-      while (j < r) {
-        h = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(sig.getLong(band * r + j), h)
-        j += 1
-      }
-      out(band) = h
       band += 1
     }
     new GenericArrayData(out)
@@ -354,54 +273,16 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
-case class SimHash64Arith(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64_arith"
-  override def checkInputDataTypes() =
-    TextSimChecks.stringArray(prettyName, child.dataType)
-  override def nullSafeEval(a: Any): Any =
-    TextSimHelpers.simhash64Arith(a.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.TextSimHelpers.simhash64Arith($a)")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-case class MinHashSigArith(child: Expression, k: Int) extends UnaryExpression {
-  require(k > 0, s"minhash_sig_arith: k must be positive, got $k")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig_arith"
-  override def checkInputDataTypes() =
-    TextSimChecks.stringArray(prettyName, child.dataType)
-  override def nullSafeEval(a: Any): Any =
-    TextSimHelpers.minhashArith(a.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.TextSimHelpers.minhashArith($a, $k)")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-case class LshBandKeysArith(child: Expression, b: Int) extends UnaryExpression {
-  require(b > 0, s"lsh_band_keys_arith: b must be positive, got $b")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "lsh_band_keys_arith"
-  override def checkInputDataTypes() =
-    TextSimChecks.longArray(prettyName, child.dataType)
-  override def nullSafeEval(a: Any): Any =
-    TextSimHelpers.bandKeysArith(a.asInstanceOf[ArrayData], b)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.TextSimHelpers.bandKeysArith($a, $b)")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-case class LshBandKeys(child: Expression, b: Int, r: Int) extends UnaryExpression {
-  require(b > 0 && r > 0, s"lsh_band_keys: b and r must be positive, got ($b, $r)")
+case class LshBandKeys(child: Expression, b: Int) extends UnaryExpression {
+  require(b > 0, s"lsh_band_keys: b must be positive, got $b")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "lsh_band_keys"
   override def checkInputDataTypes() =
     TextSimChecks.longArray(prettyName, child.dataType)
   override def nullSafeEval(a: Any): Any =
-    TextSimHelpers.bandKeys(a.asInstanceOf[ArrayData], b, r)
+    TextSimHelpers.bandKeys(a.asInstanceOf[ArrayData], b)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.TextSimHelpers.bandKeys($a, $b, $r)")
+    defineCodeGen(ctx, ev, a => s"graft.functions.TextSimHelpers.bandKeys($a, $b)")
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
@@ -412,12 +293,6 @@ object TextSimExprs {
     ColumnShim.column(SimHash64(ColumnShim.expression(tokens)))
   def minhashSig(shingles: Column, k: Int): Column =
     ColumnShim.column(MinHashSig(ColumnShim.expression(shingles), k))
-  def lshBandKeys(sig: Column, b: Int, r: Int): Column =
-    ColumnShim.column(LshBandKeys(ColumnShim.expression(sig), b, r))
-  def minhashSigArith(shingles: Column, k: Int): Column =
-    ColumnShim.column(MinHashSigArith(ColumnShim.expression(shingles), k))
-  def simhash64Arith(tokens: Column): Column =
-    ColumnShim.column(SimHash64Arith(ColumnShim.expression(tokens)))
-  def lshBandKeysArith(sig: Column, b: Int): Column =
-    ColumnShim.column(LshBandKeysArith(ColumnShim.expression(sig), b))
+  def lshBandKeys(sig: Column, b: Int): Column =
+    ColumnShim.column(LshBandKeys(ColumnShim.expression(sig), b))
 }

@@ -86,7 +86,7 @@ private[functions] object VectorChecks {
     }
 }
 
-/** Codegen'd dot product (used by the LSH hyperplane projections). */
+/** Codegen'd dot product (the SQL `dot_product`). */
 case class DotProduct(left: Expression, right: Expression)
   extends BinaryExpression {
   override def dataType: DataType = DoubleType
@@ -175,8 +175,8 @@ case class L2Distance(left: Expression, right: Expression)
 }
 
 /** Quantized sign-random-projection (SRP) LSH — the SQL-reproducible
-  * variant of the hyperplane bucket pipeline (q30's oracle mode, the
-  * embedding twin of the arithmetic-hash MinHash):
+  * hyperplane bucket pipeline of q30 (the embedding twin of the
+  * arithmetic-hash MinHash):
   *  - components are quantized exactly in both engines:
   *    f[d] = floor(v[d] · 10^6) as BIGINT (floor, not round — round's
   *    half-case tie-break differs between JVM and SQL engines);
@@ -185,8 +185,8 @@ case class L2Distance(left: Expression, right: Expression)
   *    native kernel and the generated SQL inline);
   *  - bit_p = [ Σ_d w(p,d)·f[d] ≥ 0 ] — pure integer arithmetic, so the
   *    bucket ids are bit-identical across engines. Rademacher projections
-  *    are standard SRP, so the recall s-curve matches the real-valued
-  *    hyperplane mode's.
+  *    are standard SRP: a plane separates two vectors at angle θ with
+  *    probability ≈ θ/π, as a real-valued random hyperplane does.
   */
 object SrpArith {
   import TextSimHelpers.{ArithP, arithA, arithB}

@@ -34,36 +34,30 @@ object DedupOps {
 
   /** MinHash signature — native one-pass expression (k hash streams per
     * shingle; the k × transform Column form was interpreted and rebuilt k
-    * intermediate arrays per document). `arith = true` selects the
-    * engine-neutral arithmetic-hash mode (see TextSimHelpers.minhashArith):
-    * same one-pass kernel, but every hash is plain modular arithmetic a
-    * DuckDB oracle reproduces bit-identically — this is what gives q27/q40
-    * full SQL oracles. xxhash stays the default for library callers. */
-  def minhashSig(shingleArr: Column, k: Int, arith: Boolean = false): Column =
-    if (arith) graft.functions.TextSimExprs.minhashSigArith(shingleArr, k)
-    else graft.functions.TextSimExprs.minhashSig(shingleArr, k)
+    * intermediate arrays per document). Every hash is plain modular
+    * arithmetic a DuckDB oracle reproduces bit-identically (see
+    * TextSimHelpers.minhash) — this is what gives q27/q40 full SQL
+    * oracles. */
+  def minhashSig(shingleArr: Column, k: Int): Column =
+    graft.functions.TextSimExprs.minhashSig(shingleArr, k)
 
-  /** LSH band keys: hash r-sized slices of the signature into b band keys.
-    * Arith mode uses the exact positional encoding (r = 2 only). */
-  def bandKeys(sig: Column, b: Int, r: Int, arith: Boolean = false): Column =
-    if (arith) { require(r == 2, "arith band keys require r = 2")
-      graft.functions.TextSimExprs.lshBandKeysArith(sig, b) }
-    else graft.functions.TextSimExprs.lshBandKeys(sig, b, r)
+  /** LSH band keys: b bands of r = 2 signature entries each, in the exact
+    * positional encoding (see TextSimHelpers.bandKeys). */
+  def bandKeys(sig: Column, b: Int): Column =
+    graft.functions.TextSimExprs.lshBandKeys(sig, b)
 
   /** Exact set Jaccard — native single-pass expression (one hash-set build +
     * one probe; array_intersect + array_union built four sets per pair). */
   def jaccard(a: Column, bC: Column): Column =
     graft.functions.TextSimExprs.jaccardSim(a, bC)
 
-  /** 64-bit SimHash over word unigrams (per-bit majority vote of distinct
-    * token hashes) — native one-pass expression. `arith = true` selects
-    * the SQL-reproducible 62-bit arithmetic mode (see
-    * TextSimHelpers.simhash64Arith) that gives q28 its exact oracle. */
-  def simhash64(c: Column, arith: Boolean = false): Column =
-    if (arith) graft.functions.TextSimExprs.simhash64Arith(tokens(c))
-    else graft.functions.TextSimExprs.simhash64(tokens(c))
+  /** SQL-reproducible 62-bit SimHash over word unigrams (per-bit majority
+    * vote of distinct token hashes, see TextSimHelpers.simhash64) — native
+    * one-pass expression; its arithmetic gives q28 its exact oracle. */
+  def simhash64(c: Column): Column =
+    graft.functions.TextSimExprs.simhash64(tokens(c))
 
-  /** Hamming distance between two 64-bit simhashes. */
+  /** Hamming distance between two simhashes. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   // ---------- q67/q70 line-dedup building blocks (shared so the full and
@@ -264,39 +258,35 @@ object DedupOps {
     // verify on candidates only. Band/row choice puts the s-curve midpoint at
     // (1/16)^(1/2) = 0.25, giving ~99% recall at jaccard 0.5.
     //
-    // Round 5: the registered query runs in ARITHMETIC-HASH mode — every
-    // hash is modular arithmetic DuckDB reproduces exactly, so the whole
-    // LSH pipeline now carries a full generated SQL oracle (the q29
+    // Every hash is modular arithmetic DuckDB reproduces exactly, so the
+    // whole LSH pipeline carries a full generated SQL oracle (the q29
     // generated-classifier trick; constants inlined by minhashLshOracleSql).
-    // The xxhash mode stays the library default and keeps its recall spec
-    // vs exact all-pairs in DedupSpec, which also pins both modes'
-    // verified-pair equivalence at threshold.
+    // DedupSpec measures its recall vs exact all-pairs.
     OpQuery("q27_dedup_minhash_lsh",
-      (s, d) => minhashLshPairs(t(s, d, "documents"), w = 3, k = 32, b = 16,
-        r = 2, threshold = 0.5, arith = true),
-      Some(minhashLshOracleSql(w = 3, k = 32, b = 16, threshold = 0.5))),
+      (s, d) => minhashLshPairs(t(s, d, "documents"), w = 3, b = 16,
+        threshold = 0.5),
+      Some(minhashLshOracleSql(w = 3, b = 16, threshold = 0.5))),
 
     // Incremental near-dup: the pairs ONE new batch (doc_id ≡ 2 mod 3)
     // introduces against the already-indexed corpus — the per-commit shape
     // of a continuously-ingesting pipeline (cost ∝ batch × bands, never
-    // corpus²). Arith mode (see q27) + the incremental ≡ full-restricted
-    // identity (band collisions are symmetric, so the full recompute's
-    // pairs with ≥1 batch member are exactly cross ∪ within — DedupSpec
-    // asserts it) give this a full SQL oracle too: the q27 pipeline with
-    // the final select restricted to pairs touching the batch.
+    // corpus²). The arithmetic hash (see q27) + the incremental ≡
+    // full-restricted identity (band collisions are symmetric, so the full
+    // recompute's pairs with ≥1 batch member are exactly cross ∪ within —
+    // DedupSpec asserts it) give this a full SQL oracle too: the q27
+    // pipeline with the final select restricted to pairs touching the batch.
     OpQuery("q40_dedup_incremental",
       (s, d) => {
         val all = t(s, d, "documents")
         val corpus = all.filter(col("doc_id") % 3 =!= 2)
         val batch = all.filter(col("doc_id") % 3 === 2)
         minhashLshIncremental(batch, corpus,
-          bandIndex(corpus, w = 3, k = 32, b = 16, r = 2, arith = true),
-          w = 3, k = 32, b = 16, r = 2, threshold = 0.5, arith = true)
+          bandIndex(corpus, w = 3, b = 16), w = 3, b = 16, threshold = 0.5)
       },
-      Some(minhashLshOracleSql(w = 3, k = 32, b = 16, threshold = 0.5,
+      Some(minhashLshOracleSql(w = 3, b = 16, threshold = 0.5,
         restrict = "AND (id_a % 3 = 2 OR id_b % 3 = 2)"))),
 
-    // SimHash near-dup: 64-bit fingerprint, candidates via block keys
+    // SimHash near-dup: 62-bit fingerprint, candidates via block keys
     // (Manku et al., WWW'07), verified by hamming distance. Default (4,1)
     // chunk split = 4 exploded rows/doc — the right cost at bench/test
     // corpus sizes; the (6,2) block-combination setting (22-bit keyspace,
@@ -304,13 +294,12 @@ object DedupOps {
     // scale configuration, equivalence-tested in DedupSpec. Both are EXACT
     // for hamming ≤ 3 (pigeonhole: ≤3 flipped blocks leave ≥1 key intact).
     //
-    // Round 5: registered in the ARITHMETIC 62-bit mode (per-bit majority
-    // of affine-stream parities over the engine-neutral base hash) with a
-    // generated full-pipeline DuckDB oracle — fingerprint, chunk keys,
-    // candidate join and hamming verify all reproduced in SQL. The xxhash
-    // mode stays the library default with its existing equivalence specs.
+    // The fingerprint is the per-bit majority of affine-stream parities
+    // over the engine-neutral base hash, so a generated full-pipeline
+    // DuckDB oracle reproduces fingerprint, chunk keys, candidate join and
+    // hamming verify.
     OpQuery("q28_dedup_simhash",
-      (s, d) => simhashPairs(t(s, d, "documents"), maxHamming = 3, arith = true),
+      (s, d) => simhashPairs(t(s, d, "documents"), maxHamming = 3),
       Some(simhashOracleSql(maxHamming = 3))),
 
     // INCREMENTAL simhash near-dup — q28's CDC-native form, completing the
@@ -321,15 +310,14 @@ object DedupOps {
     // the hamming verify reads both fingerprints off the candidate row.
     // Chunk-key collisions are symmetric, so incremental ≡ the full q28
     // recompute restricted to pairs touching the batch (DedupSpec pins
-    // it), which with the arith mode gives this a full DuckDB oracle:
+    // it), which with the arithmetic hash gives this a full DuckDB oracle:
     // q28's generated SQL with a final batch predicate.
     OpQuery("q79_dedup_simhash_incremental",
       (s, d) => {
         val all = t(s, d, "documents")
         val corpus = all.filter(col("doc_id") % 3 =!= 2)
         val batch = all.filter(col("doc_id") % 3 === 2)
-        simhashIncremental(batch, simhashChunkIndex(corpus, arith = true),
-          maxHamming = 3, arith = true)
+        simhashIncremental(batch, simhashChunkIndex(corpus), maxHamming = 3)
       },
       Some(simhashOracleSql(maxHamming = 3,
         restrict = "AND (id_a % 3 = 2 OR id_b % 3 = 2)"))),
@@ -710,19 +698,19 @@ object DedupOps {
              |      ELSE 0.0 END AS dup_fraction
              |  FROM nt LEFT JOIN cnt USING (doc_id))""".stripMargin)))
 
-  /** Generated DuckDB oracle for the ARITHMETIC-HASH MinHash+LSH pipeline —
-    * the q29 trick of generating the SQL from the same constants the engine
-    * computes with. Reproduces, stage by stage, exactly what
-    * [[minhashLshPairs]] does in arith mode: tokenize → w-shingle →
-    * H(s) = codepoint fold (seed 7, ×31 mod P) → k affine minhash streams
+  /** Generated DuckDB oracle for the MinHash+LSH pipeline — the q29 trick
+    * of generating the SQL from the same constants the engine computes
+    * with. Reproduces, stage by stage, exactly what [[minhashLshPairs]]
+    * does: tokenize → w-shingle →
+    * H(s) = codepoint fold (seed 7, ×31 mod P) → 2·b affine minhash streams
     * (a_j·H + b_j mod P, constants inlined) → b band keys (positional
     * sig[2i]·P + sig[2i+1] encoding) → band-key self-join within lang →
     * exact-Jaccard verify at `threshold`. `restrict` appends a predicate to
     * the final WHERE (q40's batch restriction). */
-  private[ops] def minhashLshOracleSql(w: Int, k: Int, b: Int,
+  private[ops] def minhashLshOracleSql(w: Int, b: Int,
       threshold: Double, restrict: String = ""): String = {
     val P = graft.functions.TextSimHelpers.ArithP
-    val sigExprs = (0 until k).map { j =>
+    val sigExprs = (0 until 2 * b).map { j =>
       val a = graft.functions.TextSimHelpers.arithA(j)
       val bc = graft.functions.TextSimHelpers.arithB(j)
       s"    list_min(list_transform(h, x -> ($a * x + $bc) % $P))"
@@ -1013,18 +1001,17 @@ object DedupOps {
     * cross-band dedup never shuffle shingle arrays; shingle sets re-join by
     * doc_id for the exact-Jaccard verify. Recomputing shingles on the
     * verify side is a codegen'd scan; shipping every document's shingle
-    * array through the band-key shuffle twice is corpus × bands bytes. */
-  def minhashLshPairs(docs: DataFrame, w: Int, k: Int, b: Int, r: Int,
-      threshold: Double, arith: Boolean = false): DataFrame = {
-    require(b * r == k, "bands × rows must equal signature length")
+    * array through the band-key shuffle twice is corpus × bands bytes.
+    * The signature has 2·b entries: b bands of two rows each. */
+  def minhashLshPairs(docs: DataFrame, w: Int, b: Int,
+      threshold: Double): DataFrame = {
     // spread: shingling + k-stream minhash is the corpus-scan hot loop — a
     // single-split source must not pin it to one core (see Tables.spread)
     val base = Tables.spread(docs).select(col("doc_id"), col("lang"),
       array_distinct(shingles(col("text"), w)).as("sh"))
     val banded = base
       .select(col("doc_id"), col("lang"),
-        posexplode(bandKeys(minhashSig(col("sh"), k, arith), b, r, arith))
-          .as(Seq("band", "bkey")))
+        posexplode(bandKeys(minhashSig(col("sh"), 2 * b), b)).as(Seq("band", "bkey")))
     val a = banded.select(col("band"), col("bkey"), col("lang"), col("doc_id").as("id_a"))
     val bb = banded.select(col("band"), col("bkey"), col("lang"), col("doc_id").as("id_b"))
     val cand = a.join(bb, Seq("band", "bkey", "lang"))
@@ -1050,16 +1037,12 @@ object DedupOps {
     * a lake table maintained by `append`-ing each ingested batch's bands
     * (cost ∝ batch × bands); the full self-join in [[minhashLshPairs]] is
     * then never recomputed over the corpus. */
-  def bandIndex(docs: DataFrame, w: Int, k: Int, b: Int, r: Int,
-      arith: Boolean = false): DataFrame = {
-    require(b * r == k, "bands × rows must equal signature length")
+  def bandIndex(docs: DataFrame, w: Int, b: Int): DataFrame =
     Tables.spread(docs)
       .select(col("doc_id"), col("lang"),
         array_distinct(shingles(col("text"), w)).as("sh"))
       .select(col("doc_id"), col("lang"),
-        posexplode(bandKeys(minhashSig(col("sh"), k, arith), b, r, arith))
-          .as(Seq("band", "bkey")))
-  }
+        posexplode(bandKeys(minhashSig(col("sh"), 2 * b), b)).as(Seq("band", "bkey")))
 
   /** Incremental MinHash+LSH near-dup: the pairs a NEW batch introduces —
     * batch × indexed-corpus pairs (band-key equijoin against the stored
@@ -1071,9 +1054,8 @@ object DedupOps {
     * full [[minhashLshPairs]] recompute over corpus ∪ batch (DedupSpec
     * asserts the equivalence). */
   def minhashLshIncremental(newDocs: DataFrame, corpusDocs: DataFrame,
-      index: DataFrame, w: Int, k: Int, b: Int, r: Int,
-      threshold: Double, arith: Boolean = false): DataFrame = {
-    val newBanded = bandIndex(newDocs, w, k, b, r, arith)
+      index: DataFrame, w: Int, b: Int, threshold: Double): DataFrame = {
+    val newBanded = bandIndex(newDocs, w, b)
     val cross = newBanded.select(col("band"), col("bkey"), col("lang"),
         col("doc_id").as("id_new"))
       .join(index.select(col("band"), col("bkey"), col("lang"),
@@ -1116,10 +1098,10 @@ object DedupOps {
     * exploded rows per doc. (4, 1) is the minimal classic chunk split;
     * (6, 2) is the 10⁹-doc setting. */
   def simhashPairs(docs: DataFrame, maxHamming: Int,
-      blocks: Int = 4, comboSize: Int = 1, arith: Boolean = false): DataFrame = {
+      blocks: Int = 4, comboSize: Int = 1): DataFrame = {
     require(blocks - maxHamming >= comboSize,
       s"blocks($blocks) - maxHamming($maxHamming) must be >= comboSize($comboSize) for exact recall")
-    val chunked = simhashChunkIndex(docs, blocks, comboSize, arith)
+    val chunked = simhashChunkIndex(docs, blocks, comboSize)
     val a = chunked.select(col("chunk"), col("ckey"), col("doc_id").as("id_a"), col("sh").as("sh_a"))
     val b = chunked.select(col("chunk"), col("ckey"), col("doc_id").as("id_b"), col("sh").as("sh_b"))
     // hamming verify BEFORE the cross-chunk dedup (r6): the verify is two
@@ -1145,11 +1127,11 @@ object DedupOps {
   }
 
   /** SimHash chunk index `(chunk, ckey, doc_id, sh)` — the durable state
-    * for incremental simhash dedup, appended per ingested batch (the 64-bit
+    * for incremental simhash dedup, appended per ingested batch (the
     * fingerprint rides along: the hamming verify then needs no re-join to
     * the corpus at all). */
   def simhashChunkIndex(docs: DataFrame,
-      blocks: Int = 4, comboSize: Int = 1, arith: Boolean = false): DataFrame = {
+      blocks: Int = 4, comboSize: Int = 1): DataFrame = {
     val widths = Array.tabulate(blocks)(i => 64 / blocks + (if (i < 64 % blocks) 1 else 0))
     val offsets = widths.scanLeft(0)(_ + _)
     def blockVal(sh: Column, i: Int): Column =
@@ -1170,7 +1152,7 @@ object DedupOps {
     // dropped by the join's null-reject; now it is dropped at the scan.
     Tables.spread(docs.filter(col("text").isNotNull))
       .select(col("doc_id"),
-        coalesce(simhash64(col("text"), arith), lit(0L)).as("sh"))
+        coalesce(simhash64(col("text")), lit(0L)).as("sh"))
       .select(col("doc_id"), col("sh"),
         posexplode(array(comboKeys: _*)).as(Seq("chunk", "ckey")))
   }
@@ -1181,7 +1163,7 @@ object DedupOps {
     * [[simhashPairs]] (pigeonhole on intact blocks); DedupSpec asserts
     * incremental ∪ prior ≡ full recompute. */
   def simhashIncremental(newDocs: DataFrame, index: DataFrame, maxHamming: Int,
-      blocks: Int = 4, comboSize: Int = 1, arith: Boolean = false): DataFrame = {
+      blocks: Int = 4, comboSize: Int = 1): DataFrame = {
     require(blocks - maxHamming >= comboSize,
       s"blocks($blocks) - maxHamming($maxHamming) must be >= comboSize($comboSize) for exact recall")
     // SHUFFLE_HASH joins (r6, same rewrite as [[simhashPairs]]): the batch
@@ -1191,7 +1173,7 @@ object DedupOps {
     // the batch scan + fingerprint kernel ONCE (broadcast plans rebuilt it
     // per use). The batch side is the hinted build side — at corpus scale
     // the index side is the unbounded one.
-    val newChunked = simhashChunkIndex(newDocs, blocks, comboSize, arith)
+    val newChunked = simhashChunkIndex(newDocs, blocks, comboSize)
     val cross = newChunked.select(col("chunk"), col("ckey"),
         col("doc_id").as("id_new"), col("sh").as("sh_new"))
       .hint("shuffle_hash")

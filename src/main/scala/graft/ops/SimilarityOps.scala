@@ -21,23 +21,7 @@ object SimilarityOps {
     * results bit-identical to the DuckDB oracle. */
   def cosine(a: Column, b: Column): Column = graft.functions.VectorExprs.cosineSim(a, b)
 
-  def dot(a: Column, b: Column): Column = graft.functions.VectorExprs.dotProduct(a, b)
-
   private def emb(c: Column): Column = c.cast("array<double>")
-
-  /** Deterministic pseudo-random hyperplane `plane`: literal weight vector
-    * derived from the seeded splitmix stream (computed once on the driver,
-    * broadcast as a constant — no per-row weight-array construction). */
-  def hyperplane(plane: Int, dim: Int): Array[Double] =
-    Array.tabulate(dim)(j => graft.cdc.Det.u01(42L, 1000L + plane, j.toLong) - 0.5)
-
-  def hyperplaneBit(v: Column, plane: Int, dim: Int): Column =
-    (dot(v, typedlit(hyperplane(plane, dim).toSeq)) >= 0).cast("int")
-
-  /** LSH bucket id from `nPlanes` sign bits. */
-  def lshBucket(v: Column, nPlanes: Int, dim: Int): Column =
-    (0 until nPlanes).map(p => hyperplaneBit(v, p, dim) * lit(1 << p))
-      .reduce(_ + _)
 
   /** q80's deterministic corpus/batch split — ONE definition feeding both
     * the Column filters and the generated oracle SQL, so the operator and
@@ -138,17 +122,16 @@ object SimilarityOps {
     // collides in ANY table), cosine-verified within buckets only. Recall
     // per pair at angle θ: 1-(1-(1-θ/π)^nPlanes)^L.
     //
-    // Round 5: registered in the QUANTIZED sign-random-projection mode
-    // (floor(v·10^6) integer components, ±1 Rademacher weights from the
-    // shared arithmetic stream — see VectorExprs.SrpArith), whose bucket
-    // ids are plain integer arithmetic a DuckDB oracle reproduces
-    // bit-identically; the verify is the same round-6 cosine q26's oracle
-    // already proves cross-engine. The real-valued hyperplane mode stays
-    // the library default; SimilaritySpec measures recall vs q26 for both.
+    // The projections are QUANTIZED sign-random-projection (floor(v·10^6)
+    // integer components, ±1 Rademacher weights from the shared arithmetic
+    // stream — see VectorExprs.SrpArith), whose bucket ids are plain
+    // integer arithmetic a DuckDB oracle reproduces bit-identically; the
+    // verify is the same round-6 cosine q26's oracle already proves
+    // cross-engine. SimilaritySpec measures recall vs q26.
     OpQuery("q30_embedding_neardup_lsh",
       (s, d) => lshNearDup(t(s, d, "embeddings"), nPlanes = 6, tables = 8,
-        dim = 64, floor = 0.40, arith = true),
-      Some(lshArithOracleSql(nPlanes = 6, tables = 8, dim = 64, floor = 0.40))),
+        dim = 64, floor = 0.40),
+      Some(lshOracleSql(nPlanes = 6, tables = 8, dim = 64, floor = 0.40))),
 
     // Distributed Lloyd's k-means over the embedding corpus — the
     // clustering pass behind SemDeDup-style semantic dedup and topic
@@ -242,7 +225,7 @@ object SimilarityOps {
     * integer sum (weights inlined from `SrpArith.weight` — the same
     * constants the native kernel uses), bucket ids per table, candidate
     * equijoin on (table, bucket), round-6 cosine verify. */
-  private def lshArithOracleSql(nPlanes: Int, tables: Int, dim: Int,
+  private def lshOracleSql(nPlanes: Int, tables: Int, dim: Int,
       floor: Double): String = {
     val bucketExprs = (0 until tables).map { tb =>
       (0 until nPlanes).map { p =>
@@ -489,18 +472,12 @@ object SimilarityOps {
   }
 
   def lshNearDup(embeddings: DataFrame, nPlanes: Int, tables: Int, dim: Int,
-      floor: Double, arith: Boolean = false): DataFrame = {
-    // all T×P hyperplanes are constants: per row, T codegen'd bucket ids,
-    // then posexplode into (table, bucket) — no per-row weight generation.
-    // Arith mode computes all T buckets in ONE native pass (quantized
-    // Rademacher SRP — see VectorExprs.QuantLshBuckets).
+      floor: Double): DataFrame = {
+    // all T bucket ids of a row in ONE native pass (quantized Rademacher
+    // SRP — see VectorExprs.QuantLshBuckets), then posexplode into
+    // (table, bucket)
     val bucketsPerTable =
-      if (arith) graft.functions.VectorExprs.quantLshBuckets(col("v"), tables, nPlanes, dim)
-      else array((0 until tables).map { tb =>
-        (0 until nPlanes).map(p =>
-          hyperplaneBit(col("v"), tb * nPlanes + p, dim) * lit(1 << p))
-          .reduce(_ + _)
-      }: _*)
+      graft.functions.VectorExprs.quantLshBuckets(col("v"), tables, nPlanes, dim)
     val e = Tables.spread(embeddings)
       .select(col("vec_id"), emb(col("embedding")).as("v"))
     // candidates are ID PAIRS only: the bucket join and the cross-table

@@ -44,6 +44,18 @@ class ExtensionsAndStreamingSpec extends SparkTestBase {
       // message instead of IndexOutOfBounds / ClassCast
       assert(s2.sql("SELECT size(minhash_sig(array('a','b'), CAST(8 AS BIGINT))) n")
         .head().getInt(0) == 8)
+      // the SQL names run the same kernels as the Column API: equal values
+      // on the same input, and the fingerprint is the 62-bit one
+      val toks = "array('the','quick','brown','fox','jumps','über','the','lazy','dog')"
+      val viaSql = s2.sql(s"SELECT simhash64($toks) s, minhash_sig($toks, 8) m").head()
+      val viaApi = s2.sql(s"SELECT $toks t").select(
+        graft.functions.TextSimExprs.simhash64(col("t")),
+        graft.functions.TextSimExprs.minhashSig(col("t"), 8)).head()
+      assert(viaSql.getLong(0) == viaApi.getLong(0))
+      assert(viaSql.getSeq[Long](1) == viaApi.getSeq[Long](1))
+      assert(viaSql.getSeq[Long](1).length == 8)
+      assert(viaSql.getLong(0) != 0L && (viaSql.getLong(0) >>> 62) == 0L,
+        f"simhash64 is not a 62-bit fingerprint: ${viaSql.getLong(0)}%x")
       val e1 = intercept[Exception](s2.sql("SELECT cosine_similarity(array(1.0d)) c"))
       assert(e1.getMessage.contains("expects 2 argument"), e1.getMessage)
       val e2 = intercept[Exception](

@@ -20,8 +20,19 @@ class DedupSpec extends SparkTestBase {
       .select(col("id_a"), col("id_b"), col("jac"))
   }
 
+  /** Three documents with NULL text (ids ≡ 1, 2, 0 mod 3, so they land in
+    * both the corpus and the batch of a mod-3 split), appended to `base`. */
+  private val nullTextIds = Set(880000L, 880001L, 880002L)
+  private def withNullTexts(base: org.apache.spark.sql.DataFrame) =
+    base.unionByName(base.filter(col("doc_id") < 3)
+      .withColumn("doc_id", col("doc_id") + 880000L)
+      .withColumn("text", lit(null).cast("string")))
+  private def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+  private def ids(df: org.apache.spark.sql.DataFrame, cols: String*) =
+    df.select(cols.map(col): _*).collect().flatMap(_.toSeq.map(_.asInstanceOf[Long])).toSet
+
   test("minhash LSH: perfect precision (exact verify) and high recall vs all-pairs") {
-    val lsh = DedupOps.minhashLshPairs(docs, w = 3, k = 32, b = 16, r = 2, threshold = 0.5)
+    val lsh = DedupOps.minhashLshPairs(docs, w = 3, b = 16, threshold = 0.5)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = exactPairs(3, 0.5)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
@@ -37,6 +48,54 @@ class DedupSpec extends SparkTestBase {
     assert(exact.nonEmpty, "test data produced no exact near-dup pairs — recalibrate w/threshold")
   }
 
+  test("arith-mode minhash LSH: precision, recall, and the q40 oracle identity") {
+    // q40's registered form: the pairs one batch (doc_id ≡ 2 mod 3) adds
+    // against a band index of the rest must be exact-verified, recall the
+    // confidently-similar pairs touching the batch, and equal the full
+    // recompute restricted to the batch
+    val exact = exactPairs(3, 0.5)
+      .filter(col("id_a") % 3 === 2 || col("id_b") % 3 === 2)
+      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    assert(exact.nonEmpty, "no exact near-dup pair touches the batch — recalibrate")
+    // the q40 oracle identity: incremental(batch vs index) ∪ within-batch
+    // ≡ full recompute restricted to pairs touching the batch — this is
+    // exactly what lets q40's generated SQL reuse q27's pipeline with a
+    // final batch predicate
+    val corpus = docs.filter(col("doc_id") % 3 =!= 2)
+    val batch = docs.filter(col("doc_id") % 3 === 2)
+    val inc = rows(DedupOps.minhashLshIncremental(batch, corpus,
+      DedupOps.bandIndex(corpus, 3, 16), 3, 16, 0.5))
+    // rows are (lang, id_a, id_b, jac)
+    val incPairs = inc.map(r => (r(1).asInstanceOf[Long], r(2).asInstanceOf[Long]))
+    assert(incPairs.subsetOf(exact.keySet),
+      s"incremental LSH emitted pairs below threshold: ${incPairs -- exact.keySet}")
+    val high = exact.filter(_._2 >= 0.6).keySet
+    if (high.nonEmpty) {
+      val recall = high.count(incPairs.contains).toDouble / high.size
+      assert(recall >= 0.9, s"incremental recall $recall over ${high.size} pairs with j>=0.6")
+    }
+    val full = DedupOps.minhashLshPairs(docs, 3, 16, 0.5)
+    val fullRestricted = rows(full.filter(col("id_a") % 3 === 2 || col("id_b") % 3 === 2))
+    assert(inc == fullRestricted,
+      s"incremental != full-restricted: missing ${(fullRestricted -- inc).size}, " +
+        s"extra ${(inc -- fullRestricted).size}")
+    // null text → no pairs and no band rows; every other doc's result is
+    // unchanged by the null-text docs' presence
+    val nDocs = withNullTexts(docs)
+    val nCorpus = nDocs.filter(col("doc_id") % 3 =!= 2)
+    val nBatch = nDocs.filter(col("doc_id") % 3 === 2)
+    val nFull = DedupOps.minhashLshPairs(nDocs, 3, 16, 0.5)
+    val nIndex = DedupOps.bandIndex(nDocs, 3, 16)
+    val nInc = DedupOps.minhashLshIncremental(nBatch, nCorpus,
+      DedupOps.bandIndex(nCorpus, 3, 16), 3, 16, 0.5)
+    assert((ids(nFull, "id_a", "id_b") ++ ids(nIndex, "doc_id") ++
+      ids(nInc, "id_a", "id_b")).intersect(nullTextIds).isEmpty,
+      "a null-text doc reached the minhash output")
+    assert(rows(nFull) == rows(full))
+    assert(rows(nIndex) == rows(DedupOps.bandIndex(docs, 3, 16)))
+    assert(rows(nInc) == inc)
+  }
+
   test("incremental LSH against a maintained band index ≡ full recompute") {
     import org.apache.spark.sql.functions.col
     // the production shape: corpus already indexed, batches arrive and are
@@ -44,57 +103,23 @@ class DedupSpec extends SparkTestBase {
     val corpus0 = docs.filter(col("doc_id") % 3 === 0)
     val batch1 = docs.filter(col("doc_id") % 3 === 1)
     val batch2 = docs.filter(col("doc_id") % 3 === 2)
-    val (w, k, b, r, th) = (3, 32, 16, 2, 0.5)
+    val (w, b, th) = (3, 16, 0.5)
 
-    var index = DedupOps.bandIndex(corpus0, w, k, b, r)
+    var index = DedupOps.bandIndex(corpus0, w, b)
     var corpus = corpus0
-    var pairs = DedupOps.minhashLshPairs(corpus0, w, k, b, r, th)
+    var pairs = DedupOps.minhashLshPairs(corpus0, w, b, th)
       .collect().map(_.toSeq).toSet
     for (batch <- Seq(batch1, batch2)) {
-      pairs ++= DedupOps.minhashLshIncremental(batch, corpus, index, w, k, b, r, th)
+      pairs ++= DedupOps.minhashLshIncremental(batch, corpus, index, w, b, th)
         .collect().map(_.toSeq).toSet
-      index = index.unionByName(DedupOps.bandIndex(batch, w, k, b, r))
+      index = index.unionByName(DedupOps.bandIndex(batch, w, b))
       corpus = corpus.unionByName(batch)
     }
-    val full = DedupOps.minhashLshPairs(docs, w, k, b, r, th)
+    val full = DedupOps.minhashLshPairs(docs, w, b, th)
       .collect().map(_.toSeq).toSet
     assert(pairs == full,
       s"incremental != full: missing ${(full -- pairs).size}, extra ${(pairs -- full).size}")
     assert(full.nonEmpty)
-  }
-
-  test("arith-mode minhash LSH: precision, recall, and the q40 oracle identity") {
-    // the arithmetic-hash mode (q27/q40's registered form, SQL-reproducible)
-    // must behave like a real MinHash: exact-verify precision and the same
-    // s-curve recall as the xxhash mode
-    val lsh = DedupOps.minhashLshPairs(docs, w = 3, k = 32, b = 16, r = 2,
-      threshold = 0.5, arith = true)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = exactPairs(3, 0.5)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    assert(lsh.subsetOf(exact.keySet),
-      s"arith LSH emitted pairs below threshold: ${lsh -- exact.keySet}")
-    val high = exact.filter(_._2 >= 0.6).keySet
-    if (high.nonEmpty) {
-      val recall = high.count(lsh.contains).toDouble / high.size
-      assert(recall >= 0.9, s"arith recall $recall over ${high.size} pairs with j>=0.6")
-    }
-    // the q40 oracle identity: incremental(batch vs index) ∪ within-batch
-    // ≡ full recompute restricted to pairs touching the batch — this is
-    // exactly what lets q40's generated SQL reuse q27's pipeline with a
-    // final batch predicate
-    val corpus = docs.filter(col("doc_id") % 3 =!= 2)
-    val batch = docs.filter(col("doc_id") % 3 === 2)
-    val inc = DedupOps.minhashLshIncremental(batch, corpus,
-      DedupOps.bandIndex(corpus, 3, 32, 16, 2, arith = true),
-      3, 32, 16, 2, 0.5, arith = true).collect().map(_.toSeq).toSet
-    val fullRestricted = DedupOps.minhashLshPairs(docs, 3, 32, 16, 2, 0.5,
-      arith = true)
-      .filter(col("id_a") % 3 === 2 || col("id_b") % 3 === 2)
-      .collect().map(_.toSeq).toSet
-    assert(inc == fullRestricted,
-      s"arith incremental != full-restricted: missing ${(fullRestricted -- inc).size}, " +
-        s"extra ${(inc -- fullRestricted).size}")
   }
 
   test("arith hash constants are pinned (cross-engine contract)") {
@@ -112,7 +137,7 @@ class DedupSpec extends SparkTestBase {
     // band keys are the exact positional encoding, collision-free below P
     val sig = new org.apache.spark.sql.catalyst.util.GenericArrayData(
       Array(3L, 5L, 7L, 11L))
-    val keys = TextSimHelpers.bandKeysArith(sig, 2)
+    val keys = TextSimHelpers.bandKeys(sig, 2)
     assert(keys.getLong(0) == 3L * 2147483647L + 5L)
     assert(keys.getLong(1) == 7L * 2147483647L + 11L)
   }
@@ -169,9 +194,9 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("minhash LSH is deterministic across runs and partitionings") {
-    val p1 = DedupOps.minhashLshPairs(docs, 3, 32, 16, 2, 0.5)
+    val p1 = DedupOps.minhashLshPairs(docs, 3, 16, 0.5)
       .collect().map(_.toSeq).toSet
-    val p2 = DedupOps.minhashLshPairs(docs.repartition(7), 3, 32, 16, 2, 0.5)
+    val p2 = DedupOps.minhashLshPairs(docs.repartition(7), 3, 16, 0.5)
       .collect().map(_.toSeq).toSet
     assert(p1 == p2)
   }
@@ -191,39 +216,56 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("arith-mode simhash: planted reorder dup at hamming 0, verified pairs only") {
-    // q28's registered (SQL-reproducible) mode must behave like a real
-    // simhash: order/repetition/whitespace-invariant over distinct tokens,
-    // every emitted pair within the hamming budget, deterministic
+    // q79's registered form: plant the reordered copy of doc 0 in the batch
+    // (doc_id ≡ 2 mod 3); the incremental pass must find it at hamming 0,
+    // and every pair it emits must carry the true hamming distance of the
+    // two fingerprints, within the budget
     val planted = docs.filter(col("doc_id") === 0)
-      .select(lit(990001L).as("doc_id"),
+      .select(lit(990002L).as("doc_id"),
         concat_ws("  ", reverse(split(col("text"), " "))).as("text"))
     val corpus = docs.select(col("doc_id"), col("text")).unionByName(planted)
-    val pairs = DedupOps.simhashPairs(corpus, maxHamming = 3, arith = true)
-    val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    assert(got.forall(_._3 <= 3))
-    assert(got.exists(p => p._1 == 0L && p._2 == 990001L && p._3 == 0),
-      s"planted reordered dup (0, 990001) not found at hamming 0 (arith mode)")
-    val again = DedupOps.simhashPairs(corpus.repartition(7), maxHamming = 3,
-      arith = true).collect().map(_.toSeq).toSet
+    val got = DedupOps.simhashPairs(corpus, maxHamming = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+    val again = rows(DedupOps.simhashPairs(corpus.repartition(7), maxHamming = 3))
     assert(again == got.map(p => Seq[Any](p._1, p._2, p._3)).toSet)
     // the fingerprint uses 62 bits (SQL BIGINT-safe): top two bits are 0
-    val fps = DedupOps.simhashChunkIndex(corpus, arith = true)
+    val fps = DedupOps.simhashChunkIndex(corpus)
       .select(col("sh")).distinct().collect().map(_.getLong(0))
     assert(fps.forall(f => f >= 0 && (f >> 62) == 0L))
     // the q79 oracle identity: incremental(batch vs stored index) ≡ full
     // recompute restricted to pairs touching the batch
     val corp = corpus.filter(col("doc_id") % 3 =!= 2)
     val batch = corpus.filter(col("doc_id") % 3 === 2)
-    val inc = DedupOps.simhashIncremental(batch,
-      DedupOps.simhashChunkIndex(corp, arith = true), maxHamming = 3,
-      arith = true).collect().map(_.toSeq).toSet
-    val fullRestricted = DedupOps.simhashPairs(corpus, maxHamming = 3,
-      arith = true)
-      .filter(col("id_a") % 3 === 2 || col("id_b") % 3 === 2)
-      .collect().map(_.toSeq).toSet
+    val inc = rows(DedupOps.simhashIncremental(batch,
+      DedupOps.simhashChunkIndex(corp), maxHamming = 3))
+    val fullRestricted = rows(DedupOps.simhashPairs(corpus, maxHamming = 3)
+      .filter(col("id_a") % 3 === 2 || col("id_b") % 3 === 2))
     assert(inc == fullRestricted,
-      s"arith simhash incremental != full-restricted: " +
+      s"simhash incremental != full-restricted: " +
         s"missing ${(fullRestricted -- inc).size}, extra ${(inc -- fullRestricted).size}")
+    assert(inc.contains(Seq[Any](0L, 990002L, 0)),
+      "planted reordered dup (0, 990002) not found at hamming 0 by the incremental pass")
+    val fp = DedupOps.simhashChunkIndex(corpus).select("doc_id", "sh").distinct()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for (p <- inc) {
+      val (a, b, h) = (p(0).asInstanceOf[Long], p(1).asInstanceOf[Long], p(2).asInstanceOf[Int])
+      assert(h <= 3 && java.lang.Long.bitCount(fp(a) ^ fp(b)) == h,
+        s"incremental pair ($a, $b) reported hamming $h")
+    }
+    // null text → no chunk rows and no pairs (the chunk index's coalesce
+    // to 0 relies on the explicit null filter before it); every other
+    // doc's result is unchanged by the null-text docs' presence
+    val nCorpus = withNullTexts(corpus)
+    val nPairs = DedupOps.simhashPairs(nCorpus, maxHamming = 3)
+    val nIndex = DedupOps.simhashChunkIndex(nCorpus)
+    val nInc = DedupOps.simhashIncremental(nCorpus.filter(col("doc_id") % 3 === 2),
+      DedupOps.simhashChunkIndex(nCorpus.filter(col("doc_id") % 3 =!= 2)), maxHamming = 3)
+    assert((ids(nPairs, "id_a", "id_b") ++ ids(nIndex, "doc_id") ++
+      ids(nInc, "id_a", "id_b")).intersect(nullTextIds).isEmpty,
+      "a null-text doc reached the simhash output")
+    assert(rows(nPairs) == again)
+    assert(rows(nIndex) == rows(DedupOps.simhashChunkIndex(corpus)))
+    assert(rows(nInc) == inc)
   }
 
   test("simhash block-combination keys (6,2) ≡ plain chunk split (4,1) — both exact") {

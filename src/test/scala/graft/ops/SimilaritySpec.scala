@@ -14,27 +14,29 @@ class SimilaritySpec extends SparkTestBase {
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(lsh.subsetOf(exact), s"LSH emitted non-near-dup pairs: ${lsh -- exact}")
     assert(exact.nonEmpty, "no exact near-dup pairs at floor 0.40 — recalibrate")
-    // 8 tables × 6 hyperplanes at cosine≈0.4 (θ≈66°): per-pair candidate
-    // probability ≈ 1-(1-(1-θ/π)^6)^8 ≈ 0.40 — assert a safe floor under it
+    // 8 tables × 6 Rademacher hyperplanes at cosine≈0.4 (θ≈66°): per-pair
+    // candidate probability ≈ 1-(1-(1-θ/π)^6)^8 ≈ 0.40 — assert a safe
+    // floor under it
     val recall = exact.count(lsh.contains).toDouble / exact.size
     assert(recall >= 0.2, s"recall $recall over ${exact.size} pairs")
   }
 
   test("arith (quantized SRP) LSH: precision, recall, determinism — q30's registered mode") {
+    // the registered q30 query: its pairs carry q26's exact similarity,
+    // it keeps the recall floor above, and the library call over a
+    // repartitioned corpus returns the same rows
     val exact = SparkEntry_q("q26_embedding_neardup_pairs")(spark, dir)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = SimilarityOps.lshNearDup(emb, nPlanes = 6, tables = 8, dim = 64,
-      floor = 0.40, arith = true)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(lsh.subsetOf(exact), s"arith LSH emitted non-near-dup pairs: ${lsh -- exact}")
-    // Rademacher SRP has the same per-pair collision s-curve as real-valued
-    // hyperplanes — same recall floor as the default mode's spec
-    val recall = exact.count(lsh.contains).toDouble / exact.size
-    assert(recall >= 0.2, s"arith recall $recall over ${exact.size} pairs")
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val q30 = SparkEntry_q("q30_embedding_neardup_lsh")(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(q30.forall { case (p, sim) => exact.get(p).contains(sim) },
+      s"q30 emitted pairs not in q26 with the same sim: ${q30.filterNot(p => exact.get(p._1).contains(p._2))}")
+    val recall = exact.keySet.count(q30.contains).toDouble / exact.size
+    assert(recall >= 0.2, s"q30 recall $recall over ${exact.size} pairs")
     val again = SimilarityOps.lshNearDup(emb.repartition(5), nPlanes = 6,
-      tables = 8, dim = 64, floor = 0.40, arith = true)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(again == lsh, "arith LSH not partitioning-invariant")
+      tables = 8, dim = 64, floor = 0.40)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(again == q30, "quantized SRP LSH not partitioning-invariant")
   }
 
   test("brute-force top-k is deterministic under repartitioning") {
